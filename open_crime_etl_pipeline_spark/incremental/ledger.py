@@ -1,14 +1,22 @@
 """Run ledger — pipeline metadata table (SURVEY.md §2.8 ST8, §2.9).
 
 Reference: `logs` table (create_logs.sql:1-11) written via
-``init_log``/``insert``/``update`` (`db_postgres.py:38-63,113-149`).
-Here it's a small parquet table managed read-modify-write; statuses
-RUNNING→SUCCESS/FAILED, types SCHEDULED/RECOVERY, modes
-FULL/INCREMENT (`crime_etl.py:104-106,429`).
+``init_log``/``insert``/``update`` (`db_postgres.py:38-63,113-149`),
+single-row INSERT and UPDATE statements. Statuses
+RUNNING→SUCCESS/FAILED, types SCHEDULED/RECOVERY, modes FULL/INCREMENT
+(`crime_etl.py:104-106,429`).
 
-The ledger is metadata (thousands of rows, not billions): a driver-side
-overwrite of a tiny table per run is the right tool; the fact tables
-never take this path.
+Each run owns one file, ``<path>/run-<run_id>.parquet``, holding its
+one row. The driver writes it with pyarrow to a hidden ``.tmp-<uuid>``
+file and publishes it with ``os.replace``: writing the ledger costs no
+Spark job and no Python worker, and no write ever touches another
+run's file, so neither a crash nor a concurrent writer can lose
+another run's row. A writer killed before the rename leaves only the
+hidden temp file, which Spark's reader skips like ``_SUCCESS``.
+
+Reads stay Spark scans of ``LOGS_SCHEMA`` over the directory. A ledger
+written in the older layout (one Spark part file holding every row)
+therefore reads together with the per-run files, with no migration.
 """
 
 from __future__ import annotations
@@ -17,10 +25,17 @@ import datetime as dt
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import LOGS_SCHEMA
+
+# TimestampType → timestamp[us, tz=UTC]: Spark reads a UTC-adjusted
+# parquet timestamp back as the same instant under any session timezone.
+_ARROW_SCHEMA = to_arrow_schema(LOGS_SCHEMA)
 
 
 def _utcnow() -> dt.datetime:
@@ -40,18 +55,23 @@ class RunLedger:
             f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
         )
 
+    def _run_file(self, run_id: str) -> str:
+        return os.path.join(self.path, f"run-{run_id}.parquet")
+
     def read(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], LOGS_SCHEMA)
         return self.spark.read.schema(LOGS_SCHEMA).parquet(self.path)
 
-    def _write(self, df: DataFrame) -> None:
-        # Tiny metadata table: write to a temp dir then swap would be
-        # needed for concurrent readers; single-writer engine semantics
-        # match the reference's transactional INSERT/UPDATE.
-        staged = df.collect()
-        out = self.spark.createDataFrame(staged, LOGS_SCHEMA)
-        out.coalesce(1).write.mode("overwrite").parquet(self.path)
+    def _publish(self, row: dict) -> None:
+        """Atomically replace the run's one-row file with ``row``."""
+        os.makedirs(self.path, exist_ok=True)
+        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "wb") as f:
+            pq.write_table(pa.Table.from_pylist([row], schema=_ARROW_SCHEMA), f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._run_file(row["run_id"]))
 
     def start_run(
         self,
@@ -63,23 +83,25 @@ class RunLedger:
     ) -> str:
         """Insert a RUNNING row (≡ init_log, db_postgres.py:86-91)."""
         run_id = run_id or uuid.uuid4().hex
-        row = [(run_id, load_date, run_type, mode, "RUNNING",
-                _utcnow(), None, config)]
-        new = self.spark.createDataFrame(row, LOGS_SCHEMA)
-        self._write(self.read().unionByName(new))
+        self._publish({
+            "run_id": run_id, "load_date": load_date, "type": run_type,
+            "mode": mode, "status": "RUNNING", "start_time": _utcnow(),
+            "end_time": None, "config": config,
+        })
         return run_id
 
     def finish_run(self, run_id: str, load_date: dt.date, status: str) -> None:
-        """Terminal SUCCESS/FAILED update (≡ update, db_postgres.py:128-149)."""
-        cur = self.read()
-        hit = (F.col("run_id") == run_id) & (F.col("load_date") == F.lit(load_date))
-        updated = cur.withColumn(
-            "status", F.when(hit, F.lit(status)).otherwise(F.col("status"))
-        ).withColumn(
-            "end_time",
-            F.when(hit, F.lit(_utcnow())).otherwise(F.col("end_time")),
-        )
-        self._write(updated)
+        """Terminal SUCCESS/FAILED update (≡ update, db_postgres.py:128-149).
+        Only the row matching both ``run_id`` and ``load_date`` changes;
+        an unmatched call changes nothing."""
+        try:
+            [row] = pq.read_table(self._run_file(run_id)).to_pylist()
+        except FileNotFoundError:
+            return
+        if row["load_date"] != load_date:
+            return
+        row.update(status=status, end_time=_utcnow())
+        self._publish(row)
 
     def last_successful_load_date(self) -> dt.date | None:
         """≡ MAX(load_date) WHERE status IN ('SUCCESS','RUNNING')

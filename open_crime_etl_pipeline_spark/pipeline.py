@@ -8,7 +8,8 @@ API. Stage mapping:
     upload_to_s3         → partitioned gzip-JSON landing write (S3/S4)
     load_to_warehouses   → landing scan → silver transform → join-based
                            MERGE into the crime table (S5/S6/P1-P3/J1)
-    update_metadata      → run-ledger lifecycle rows (ST8)
+    update_metadata      → run-ledger lifecycle row, one driver-written
+                           parquet file per run, atomically replaced (ST8)
     validate/sync        → replica reconciliation + recovery loads (ST9)
 
 Two independent `CrimePipeline` instances over different lake roots

@@ -72,3 +72,19 @@ def test_replica_reconciliation_recovery(spark, lake):
     b_dates = {r.load_date for r in b.ledger.successful_load_dates().collect()}
     assert a_dates == b_dates
     assert b.sync_from(a, now=NOW2) == []  # converged, nothing to recover
+
+
+def test_failed_run_then_rerun_leaves_one_success(spark, lake):
+    # A run whose ingest raises leaves one FAILED row; rerunning the same
+    # load_date against a healthy endpoint adds exactly one SUCCESS.
+    root, d = str(lake / "crash"), NOW1.date()
+    crashing = CrimePipeline(spark, root, endpoint="crash://120:0", pagesize=60)
+    with pytest.raises(Exception):
+        crashing.run(now=NOW1, load_date=d)
+    p = CrimePipeline(spark, root, endpoint="fake://120", pagesize=60)
+    assert [(r.load_date, r.status) for r in p.ledger.read().collect()] == [(d, "FAILED")]
+
+    assert p.run(now=NOW1, load_date=d)["status"] == "SUCCESS"
+    rows = p.ledger.read().collect()
+    assert sorted((r.load_date, r.status) for r in rows) == [(d, "FAILED"), (d, "SUCCESS")]
+    assert [r.load_date for r in p.ledger.successful_load_dates().collect()] == [d]
